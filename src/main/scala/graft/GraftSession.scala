@@ -5,7 +5,16 @@ import org.apache.spark.sql.SparkSession
 /** Library entry point: a SparkSession configured the way the engine
   * expects — extensions registered, AQE + skew-join on, shuffle
   * parallelism sized to the core count (not Spark's default 200, which
-  * at local scale just manufactures tiny tasks).
+  * at local scale just manufactures tiny tasks), and the `file` scheme
+  * served by the fork-free local filesystem (`sources/LocalFs`) on both
+  * Hadoop APIs: without `libhadoop`, Hadoop's own one forks a `chmod` per
+  * file create and mkdir and a `readlink` per `FileContext` status
+  * probe, the largest fixed cost of a streaming micro-batch.
+  *
+  * Build every session through `builder`: the registration is a Hadoop
+  * conf entry, so it only takes effect when this session creates the
+  * JVM's first cached `file://` `FileSystem`. A session that
+  * `getOrCreate` finds already running keeps its own filesystem.
   */
 object GraftSession {
 
@@ -18,6 +27,10 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.NioLocalFs].getName)
 
   // ExecutionListenerManager does not dedup: guard against stacking the
   // metrics logger when local() is called twice on a reused session

@@ -173,12 +173,13 @@ object Sources {
     * contents); readers see `dest` as ordinary partitioned parquet and
     * can prune on `__batch_id`. Use from `writeStream.foreachBatch(
     * Sources.idempotentBatchWriter(dest))`. The same mechanism serves
-    * batch backfills: re-running a failed backfill slice replaces it. */
+    * batch backfills: re-running a failed backfill slice replaces it.
+    * The dynamic mode is a write option, so the session's own
+    * `spark.sql.sources.partitionOverwriteMode` is left as it was. */
   def idempotentBatchWriter(dest: String)
       : (DataFrame, Long) => Unit = { (df, batchId) =>
-    df.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     df.withColumn("__batch_id", org.apache.spark.sql.functions.lit(batchId))
-      .write.mode("overwrite").partitionBy("__batch_id").parquet(dest)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("__batch_id").parquet(dest)
   }
 }

@@ -180,6 +180,8 @@ class SourcesSpec extends SparkSpec {
 
   test("idempotentBatchWriter: a replayed micro-batch does not duplicate") {
     val dest = tmp("sink")
+    val modeKey = "spark.sql.sources.partitionOverwriteMode"
+    val modeBefore = spark.conf.getOption(modeKey)
     val w = Sources.idempotentBatchWriter(dest)
     w(Seq((1L, "a"), (2L, "b")).toDF("id", "s"), 0L)
     w(Seq((3L, "c")).toDF("id", "s"), 1L)
@@ -196,5 +198,8 @@ class SourcesSpec extends SparkSpec {
       .head.getString(0) == "c2")
     // batch 0 untouched by batch 1's overwrite (dynamic mode)
     assert(back2.where(col("__batch_id") === 0).count() == 2)
+    // dynamic mode rides on the write: later overwrites in the session
+    // keep the session's own mode
+    assert(spark.conf.getOption(modeKey) == modeBefore)
   }
 }
